@@ -22,6 +22,7 @@ manifest flip in ``KeyedParquetTable`` — see its class docstring).
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
+from functools import cached_property
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -1038,18 +1039,48 @@ class KeyedParquetTable:
                 jout[rel] = int(st.getLen())
         return jout
 
+    @cached_property
+    def _catalog_utils(self):
+        """Spark's ExternalCatalogUtils (partition path escaping),
+        resolved once: every package step of a py4j class lookup is
+        its own JVM round trip, ~10x the cost of the call itself."""
+        return (
+            self.spark._jvm.org.apache.spark.sql.catalyst.catalog
+            .ExternalCatalogUtils
+        )
+
     def _partition_dir_of(self, value) -> str:
         """PartitionKey=<escaped> directory name for a partition
         VALUE — byte-matching Spark's own writer escaping."""
-        jvm = self.spark._jvm
         if value is None:
             esc = "__HIVE_DEFAULT_PARTITION__"
         else:
-            esc = (
-                jvm.org.apache.spark.sql.catalyst.catalog
-                .ExternalCatalogUtils.escapePathName(str(value))
-            )
+            esc = self._catalog_utils.escapePathName(str(value))
         return f"{self.keys[0]}={esc}"
+
+    def _partition_pred(self, values):
+        """Row predicate "the partition key is one of ``values``" —
+        NULL-safe (``col == None`` is NULL for every row, so the NULL
+        partition needs isNull); the pre-manifest fallback of the
+        partition-scoped reads."""
+        col = F.col(self.keys[0])
+        non_null = [v for v in values if v is not None]
+        pred = col.isin(non_null) if non_null else F.lit(False)
+        if any(v is None for v in values):
+            pred = pred | col.isNull()
+        return pred
+
+    def _partition_dirs(self, values) -> set[str]:
+        """The partition directory names of ``values`` — one escaping
+        round trip per value, so a verb computes its touched set once
+        and passes it on."""
+        return {self._partition_dir_of(v) for v in values}
+
+    @staticmethod
+    def _files_in(files: Sequence[str], dirs: set[str]) -> list[str]:
+        """The table-relative ``files`` that live in one of the
+        partition directories ``dirs``, in their original order."""
+        return [f for f in files if f.split("/", 1)[0] in dirs]
 
     def _delete_rel(self, rel: str) -> None:
         jvm = self.spark._jvm
@@ -1547,8 +1578,9 @@ class KeyedParquetTable:
         snap = self._read_snapshot()
         if not snap or not snap.get("files"):
             return None
-        pdir = self._partition_dir_of(partition_value)
-        cand = [f for f in snap["files"] if f.split("/", 1)[0] == pdir]
+        cand = self._files_in(
+            snap["files"], {self._partition_dir_of(partition_value)}
+        )
         stats = snap.get("stats") or {}
         out = []
         for f in cand:
@@ -1586,12 +1618,9 @@ class KeyedParquetTable:
         )
         files = self._lookup_files(partition_value, row_key)
         if files is None:
-            pk_pred = (
-                F.col(self.keys[0]).isNull()
-                if partition_value is None
-                else F.col(self.keys[0]) == partition_value
+            return self.read().filter(
+                self._partition_pred([partition_value]) & rk_pred
             )
-            return self.read().filter(pk_pred & rk_pred)
         if not files:
             return self.read().filter(F.lit(False))
         return self._read_files(self.spark, files).filter(rk_pred)
@@ -1607,17 +1636,8 @@ class KeyedParquetTable:
         snap = self._read_snapshot()
         vals = list(values)
         if snap is None:
-            col = F.col(self.keys[0])
-            non_null = [v for v in vals if v is not None]
-            pred = col.isin(non_null) if non_null else F.lit(False)
-            if any(v is None for v in vals):
-                pred = pred | col.isNull()
-            return self.read().filter(pred)
-        dirs = {self._partition_dir_of(v) for v in vals}
-        files = [
-            f for f in snap.get("files", [])
-            if f.split("/", 1)[0] in dirs
-        ]
+            return self.read().filter(self._partition_pred(vals))
+        files = self._files_in(snap["files"], self._partition_dirs(vals))
         if not files:
             return self.read().filter(F.lit(False))
         return self._read_files(self.spark, files)
@@ -1667,9 +1687,12 @@ class KeyedParquetTable:
                 )
         return doc
 
-    def _read_touched(self, sess, parts, part_type: str | None = None) -> DataFrame:
+    def _read_touched(
+        self, sess, parts, dirs: set[str], part_type: str | None = None
+    ) -> DataFrame:
         """Manifest-pinned read of the partitions whose VALUES are in
-        ``parts`` (None allowed) through session ``sess`` — the
+        ``parts`` (None allowed; ``dirs`` their directory names)
+        through session ``sess`` — the
         executed inputFiles are exactly the touched partitions' live
         files, by file-list construction rather than by trusting
         catalyst pruning over the full listing. This is the read the
@@ -1691,12 +1714,7 @@ class KeyedParquetTable:
         vals = list(parts)
         snap = self._read_snapshot()
         if snap is None:
-            col = F.col(self.keys[0])
-            non_null = [v for v in vals if v is not None]
-            pred = col.isin(non_null) if non_null else F.lit(False)
-            if any(v is None for v in vals):
-                pred = pred | col.isNull()
-            return self._read_with(sess).filter(pred)
+            return self._read_with(sess).filter(self._partition_pred(vals))
         if vals and all(v is None for v in vals):
             # only the NULL partition is touched: no directory value
             # to infer a type from (Spark raises on VOID partition
@@ -1705,19 +1723,10 @@ class KeyedParquetTable:
             return self._read_with(sess).filter(
                 F.col(self.keys[0]).isNull()
             )
-        dirs = {self._partition_dir_of(v) for v in vals}
-        files = [
-            f for f in snap.get("files", [])
-            if f.split("/", 1)[0] in dirs
-        ]
+        files = self._files_in(snap["files"], dirs)
         if not files:
             return self._read_with(sess).filter(F.lit(False))
-        df = self._read_files(sess, files)
-        if part_type and dict(df.dtypes).get(self.keys[0]) != part_type:
-            df = df.withColumn(
-                self.keys[0], F.col(self.keys[0]).cast(part_type)
-            )
-        return df
+        return self._read_rels(sess, files, part_type=part_type)
 
     def _pinned_struct(self):
         """The manifest's pinned table schema as a StructType, or
@@ -1854,7 +1863,7 @@ class KeyedParquetTable:
         return out
 
     def _cow_split(
-        self, key_set: DataFrame, parts, has_null: bool | None = None
+        self, key_set: DataFrame, dirs: set[str], has_null: bool | None = None
     ) -> tuple[list[str], list[str]] | None:
         """File-level copy-on-write split of the touched partitions'
         live files: ``(hit, clean)``, where *hit* files MAY contain a
@@ -1864,7 +1873,8 @@ class KeyedParquetTable:
         files live untouched. At 100 TB this is the difference between
         rewriting a hot multi-GB partition and rewriting the couple of
         128 MB files a CDC batch actually lands in (Delta/Iceberg
-        copy-on-write granularity); after ``compact(cluster=True)``
+        copy-on-write granularity; ``dirs`` are the touched partitions'
+        directory names); after ``compact(cluster=True)``
         the partition's files carry disjoint row-key ranges, so the
         hit set degenerates to ~|batch| files.
 
@@ -1880,12 +1890,12 @@ class KeyedParquetTable:
         and hit sets confined to the NULL partition directory (whose
         subset read infers an unusable VOID partition column)."""
         snap = self._read_snapshot()
-        vals = list(parts)
+        null_dir = self._partition_dir_of(None)
         if (
             snap is None
             or len(self.keys) < 2
-            or not vals
-            or all(v is None for v in vals)
+            or not dirs
+            or dirs == {null_dir}
         ):
             return None
         rk = self.keys[1]
@@ -1896,10 +1906,7 @@ class KeyedParquetTable:
             py_t = str
         else:
             return None
-        dirs = {self._partition_dir_of(v) for v in vals}
-        cand = [
-            f for f in snap.get("files", []) if f.split("/", 1)[0] in dirs
-        ]
+        cand = self._files_in(snap["files"], dirs)
         if not cand:
             return [], []
         stats = snap.get("stats") or {}
@@ -1953,36 +1960,29 @@ class KeyedParquetTable:
             # range comparison is unchanged.
             probe_t = "bigint" if py_t is int else "string"
             try:
-                # The bounds frame as a SQL VALUES LocalRelation, NOT
-                # createDataFrame (r14): pyspark's createDataFrame
-                # parallelizes local rows into an RDD-backed frame, so
-                # broadcasting it costs its own Spark job per probe —
-                # a VALUES relation broadcasts driver-side, job-free.
-                # Escaping failures (exotic stats) fall into the
-                # conservative except below, like every probe failure.
-                def _sqlit(v) -> str:
-                    if isinstance(v, str):
-                        esc = v.replace("\\", "\\\\").replace("'", "''")
-                        return f"'{esc}'"
-                    return str(int(v))
+                # The bounds frame as an Arrow-built LocalRelation: it
+                # broadcasts driver-side with no Spark job (an RDD-
+                # backed createDataFrame(list) costs one per probe),
+                # and unlike a SQL VALUES literal its values never pass
+                # through the parser, so the caller's confs (escaped
+                # string literals, ANSI casts) cannot alter a bound.
+                # int64 columns refuse out-of-range Python ints; that
+                # failure falls into the conservative except below,
+                # like every probe failure.
+                import pandas as pd
 
-                if len(ranged) <= 10_000:
-                    values = ",".join(
-                        f"({_sqlit(rel)},{_sqlit(mn)},{_sqlit(mx)})"
-                        for rel, mn, mx in ranged
-                    )
-                    files_df = sess.sql(
-                        f"SELECT col1 AS __rel, CAST(col2 AS {probe_t})"
-                        f" AS __mn, CAST(col3 AS {probe_t}) AS __mx"
-                        f" FROM (VALUES {values})"
-                    )
-                else:
-                    # parsing a VALUES list this long would cost more
-                    # than the one broadcast-collect job it avoids
-                    files_df = sess.createDataFrame(
-                        ranged,
-                        f"__rel string, __mn {probe_t}, __mx {probe_t}",
-                    )
+                rels, mns, mxs = zip(*ranged)
+                dtype = "int64" if py_t is int else object
+                files_df = sess.createDataFrame(
+                    pd.DataFrame(
+                        {
+                            "__rel": pd.Series(rels, dtype=object),
+                            "__mn": pd.Series(mns, dtype=dtype),
+                            "__mx": pd.Series(mxs, dtype=dtype),
+                        }
+                    ),
+                    f"__rel string, __mn {probe_t}, __mx {probe_t}",
+                )
                 # ONE action: left-join every key row (no distinct —
                 # duplicate keys only re-emit rels collect_set drops)
                 # against the broadcast-local bounds, fold the hit rels
@@ -2024,7 +2024,6 @@ class KeyedParquetTable:
                 )
         if has_null and null_sensitive:
             hit += null_sensitive
-        null_dir = self._partition_dir_of(None)
         if hit and all(f.split("/", 1)[0] == null_dir for f in hit):
             return None  # VOID partition-column inference hazard
         hit_set = set(hit)
@@ -2054,13 +2053,13 @@ class KeyedParquetTable:
         join runs once and updates fan out via one generator.
 
         MANIFEST-POWERED: files common to both versions cannot
-        contribute changes (every verb rewrites whole partition file
-        sets), so only the two manifests' symmetric difference is ever
-        read — at 100 TB, diffing two versions that touched one
-        partition scans one partition, not the table. Rewritten-but-
-        identical rows (an upsert re-materializes its partition's
-        unchanged rows) are compared null-safely column-by-column and
-        dropped."""
+        contribute changes (data files are immutable: a verb only adds
+        new files and retires old ones), so only the two manifests'
+        symmetric difference is ever read — at 100 TB, diffing two
+        versions that touched one partition scans one partition, not
+        the table. Rewritten-but-identical rows (a copy-on-write
+        rewrite re-materializes a hit file's unchanged rows) are
+        compared null-safely column-by-column and dropped."""
         doc_a = self._version_doc(from_version)
         if to_version is None:
             snap = self._read_snapshot()
@@ -2266,41 +2265,59 @@ class KeyedParquetTable:
             new_files, prev_files, op="overwrite", written_schema=df.schema
         )
 
-    def partition_is_empty(self, partition_value: str) -> bool:
-        """I2 idempotency gate (otrrentetl/server/etl.py:29,71): a
-        LIMIT-1 probe against one partition — partition-pruned scan."""
-        if not self.exists():
-            return True
-        # three-valued logic: `col == None` is NULL for every row, so
-        # probing the NULL partition needs isNull explicitly
-        pred = (
-            F.col(self.keys[0]).isNull()
-            if partition_value is None
-            else F.col(self.keys[0]) == partition_value
+    def partition_is_empty(self, partition_value: str | None) -> bool:
+        """I2 idempotency gate (otrrentetl/server/etl.py:29,71),
+        answered from the committed snapshot: the partition's live
+        files and their footer-stats row counts — no Spark job. Only
+        live files without stats are scanned (a LIMIT-1 probe), and a
+        pre-manifest table keeps the partition-pruned probe."""
+        snap = self._read_snapshot()
+        if snap is None:
+            if not self.exists():
+                return True
+            probe = self.read().filter(self._partition_pred([partition_value]))
+            return not probe.limit(1).collect()
+        files = self._files_in(
+            snap["files"], {self._partition_dir_of(partition_value)}
         )
-        probe = self.read().filter(pred).limit(1).collect()
-        return len(probe) == 0
-
-    def _partition_path(self, partition_value: str | None):
-        """Hadoop Path of one PartitionKey=<v> directory (works on any
-        Hadoop-compatible FS, not just local disk).
-
-        Escaping MUST byte-match what the writer produced, so delegate
-        to Spark's own ExternalCatalogUtils.escapePathName (spaces and
-        commas stay literal; only control chars and a specific symbol
-        set are %XX-escaped — a urllib-style quote targets the wrong
-        directory for e.g. 'user 1'). A NULL partition value lands in
-        Hive's __HIVE_DEFAULT_PARTITION__ directory."""
-        jvm = self.spark._jvm
+        stats = snap.get("stats") or {}
+        unstated = []
+        for f in files:
+            rows = (stats.get(f) or {}).get("rows")
+            if rows is None:
+                unstated.append(f)
+            elif rows > 0:
+                return False
+        if not unstated:
+            return True
         if partition_value is None:
-            escaped = "__HIVE_DEFAULT_PARTITION__"
+            # a NULL-dir-only read would infer a VOID partition column
+            probe = self.read().filter(F.col(self.keys[0]).isNull())
         else:
-            escaped = (
-                jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                .escapePathName(str(partition_value))
-            )
-        return jvm.org.apache.hadoop.fs.Path(
-            f"{self.path}/{self.keys[0]}={escaped}"
+            probe = self._read_files(self.spark, unstated)
+        return not probe.limit(1).collect()
+
+    @_locked
+    def drop_partitions(self, values) -> None:
+        """Delete every row of the named partitions by retiring their
+        live files — a metadata-only commit through the usual snapshot
+        protocol (lock, fence, exclusive delta, retention), with no
+        Spark job: "every row of partition X" needs no data read.
+        ``None`` names the NULL partition. Nothing is committed when
+        no live file matches. ``changes()`` reports the dropped rows
+        as deletes, and earlier versions stay readable while the
+        retired files are retained."""
+        snap = self._read_snapshot()
+        prev_files = (
+            list(snap["files"]) if snap is not None
+            else self._list_data_files()
+        )
+        dropped = self._files_in(prev_files, self._partition_dirs(values))
+        if not dropped:
+            return
+        gone = set(dropped)
+        self._commit_snapshot(
+            [f for f in prev_files if f not in gone], dropped, op="delete"
         )
 
     @_locked
@@ -2362,11 +2379,12 @@ class KeyedParquetTable:
             return
         has_null = bool(rk) and any(r["__n"] for r in part_rows)
         part_type = dict(key_set.dtypes)[self.keys[0]]
+        dirs = self._partition_dirs(parts)
         # file-level copy-on-write (r10): rewrite ONLY the files whose
         # footer row-key range can contain a delete key; files the
         # manifest stats prove clean stay live untouched. Falls back
         # to the whole-partition rewrite when the split isn't provable.
-        split = self._cow_split(key_set, parts, has_null=has_null)
+        split = self._cow_split(key_set, dirs, has_null=has_null)
         if split is not None and not split[0]:
             # no live file can contain any delete key: physical no-op,
             # committed anyway so the verb still flips a version
@@ -2377,7 +2395,7 @@ class KeyedParquetTable:
             # manifest-pinned touched-slice read: exactly the delete
             # set's partitions' live files (NULL keys in the helper)
             touched_rows = self._read_touched(
-                self.spark, parts, part_type=part_type
+                self.spark, parts, dirs, part_type=part_type
             )
         else:
             touched_rows = self._read_rels(
@@ -2387,42 +2405,12 @@ class KeyedParquetTable:
         # consumer, and its input files stay live until the commit
         # after the write — no pin needed (see the docstring)
         remaining = delete_keys(touched_rows, key_set, self.keys)
-        snap = self._read_snapshot()
-        # before/after listings scoped to the TOUCHED partition dirs
-        # (the write only lands there): O(touched files) per mutation,
-        # never a table walk (manifest v2)
-        scope = (
-            {self._partition_dir_of(p) for p in parts}
-            if snap is not None
-            else None
-        )
-        before = set(self._list_data_files(scope))
-        prev_files = list(snap["files"]) if snap else sorted(before)
         # append the touched slice's SURVIVING rows as new files; the
         # manifest flip supersedes every rewritten file (a fully-
         # emptied partition simply contributes no new files, so "this
         # partition is now empty" is expressible — the old dynamic-
         # overwrite protocol needed an explicit rmtree)
-        remaining.write.mode("append").partitionBy(self.keys[0]).parquet(
-            self.path
-        )
-        new_files = [
-            f for f in self._list_data_files(scope) if f not in before
-        ]
-        if split is None:
-            touched_dirs = {self._partition_dir_of(p) for p in parts}
-            live = [
-                f for f in prev_files
-                if f.split("/", 1)[0] not in touched_dirs
-            ] + new_files
-            superseded = [
-                f for f in prev_files if f.split("/", 1)[0] in touched_dirs
-            ]
-        else:
-            hit = set(split[0])
-            live = [f for f in prev_files if f not in hit] + new_files
-            superseded = sorted(hit)
-        self._commit_snapshot(live, superseded, op="delete")
+        self._append_and_commit(remaining, dirs, split, op="delete")
 
     def stats(self) -> DataFrame:
         """Per-partition table statistics: row count, file count, and
@@ -2591,13 +2579,11 @@ class KeyedParquetTable:
                     {f.split("/", 1)[0] for f in self._list_data_files()}
                 )
         else:
-            dirs = sorted(
-                {self._partition_dir_of(p) for p in partitions}
-            )
+            dirs = sorted(self._partition_dirs(partitions))
         scope = set(dirs)
         before = set(self._list_data_files(scope if snap else None))
         prev_files = list(snap["files"]) if snap else sorted(before)
-        target_rels = [f for f in prev_files if f.split("/", 1)[0] in scope]
+        target_rels = self._files_in(prev_files, scope)
         if not target_rels:
             return
         touched = sorted({f.split("/", 1)[0] for f in target_rels})
@@ -2884,14 +2870,10 @@ class KeyedParquetTable:
             for f in self._list_data_files(scope if snap else None)
             if f not in before
         ]
-        live = [
-            f for f in prev_files if f.split("/", 1)[0] not in scope
-        ] + new_files
-        superseded = [
-            f for f in prev_files if f.split("/", 1)[0] in scope
-        ]
+        gone = set(target_rels)
+        live = [f for f in prev_files if f not in gone] + new_files
         # ONE atomic commit for the whole maintenance pass
-        self._commit_snapshot(live, superseded, op="compact")
+        self._commit_snapshot(live, target_rels, op="compact")
 
     def _compact_all(self, target_file_bytes: int, cluster: bool) -> None:
         """Whole-table compaction as one job + one commit (see
@@ -3095,14 +3077,40 @@ class KeyedParquetTable:
         raw = dirname[len(self.keys[0]) + 1:]
         if raw == "__HIVE_DEFAULT_PARTITION__":
             return None
-        jvm = self.spark._jvm
-        return (
-            jvm.org.apache.spark.sql.catalyst.catalog
-            .ExternalCatalogUtils.unescapePathName(raw)
+        return self._catalog_utils.unescapePathName(raw)
+
+    def _append_and_commit(
+        self, rows: DataFrame, dirs: set[str], split, op: str,
+        written_schema=None,
+    ) -> None:
+        """Append ``rows`` (which land only in the touched partition
+        directories ``dirs``) and commit: the COW ``split``'s hit
+        files — or, without a split, every live file of ``dirs`` — are
+        superseded by the freshly written ones. The before/after
+        listings are scoped to ``dirs``: O(touched files) per
+        mutation, never a table walk (manifest v2)."""
+        snap = self._read_snapshot()
+        scope = dirs if snap is not None else None
+        before = set(self._list_data_files(scope))
+        prev_files = list(snap["files"]) if snap else sorted(before)
+        rows.write.mode("append").partitionBy(self.keys[0]).parquet(
+            self.path
+        )
+        new_files = [
+            f for f in self._list_data_files(scope) if f not in before
+        ]
+        superseded = (
+            self._files_in(prev_files, dirs) if split is None
+            else sorted(split[0])
+        )
+        gone = set(superseded)
+        live = [f for f in prev_files if f not in gone] + new_files
+        self._commit_snapshot(
+            live, superseded, op=op, written_schema=written_schema
         )
 
     @_locked
-    def upsert_replace_partitions(self, new: DataFrame) -> None:
+    def upsert_replace_partitions(self, new: DataFrame) -> int:
         """Replace-upsert restricted to the partitions present in
         ``new`` — append + manifest flip, no full-table rewrite.
 
@@ -3112,12 +3120,13 @@ class KeyedParquetTable:
         after the write completes. Reads and writes go through
         ``new``'s OWN session: under ``foreachBatch`` the micro-batch
         DataFrame belongs to a cloned session.
+
+        Returns the batch's row count, duplicate keys included — the
+        partition tally below counts it, so a caller needs no count()
+        of its own. An empty batch returns 0 and commits nothing.
         """
         sess = new.sparkSession
-        if not self.exists():
-            # unlocked inner form: this verb already holds the lock
-            self._overwrite_unlocked(new.dropDuplicates(list(self.keys)))
-            return
+        exists = self.exists()
         # PIN the incoming frame before ANY of it is observed (ADVICE
         # r10): the COW split proves files clean against one evaluation
         # of ``new``'s keys, and the append below evaluates the plan
@@ -3139,13 +3148,14 @@ class KeyedParquetTable:
         # type here; WIDER / incompatible drift forces the merge path
         # (split=None), whose union coercion rewrites the touched
         # partitions at the widened type — the exact pre-COW behavior.
-        aligned = self._align_for_append(new)
+        aligned = self._align_for_append(new) if exists else new
         drift_blocks_append = aligned is None
         if not drift_blocks_append:
             new = aligned
-        # ONE action answers both routing questions — the touched
-        # partition list AND whether any incoming row key is NULL (the
+        # ONE action answers every routing question — the touched
+        # partition list, whether any incoming row key is NULL (the
         # COW split's null-sensitivity flag, formerly its own probe)
+        # and the batch's row count (the verb's result)
         rk = self.keys[1] if len(self.keys) >= 2 else None
         with _no_aqe(sess):
             part_rows = (
@@ -3153,13 +3163,22 @@ class KeyedParquetTable:
                 .agg(
                     F.max(
                         F.col(rk).isNull() if rk else F.lit(False)
-                    ).alias("__n")
+                    ).alias("__n"),
+                    F.count(F.lit(1)).alias("__rows"),
                 )
                 .collect()
             )
+        n_rows = sum(r["__rows"] for r in part_rows)
+        if not n_rows:
+            return 0
+        if not exists:
+            # unlocked inner form: this verb already holds the lock
+            self._overwrite_unlocked(new.dropDuplicates(list(self.keys)))
+            return n_rows
         parts = [r[0] for r in part_rows]
         has_null = bool(rk) and any(r["__n"] for r in part_rows)
         part_type = dict(new.dtypes)[self.keys[0]]
+        dirs = self._partition_dirs(parts)
         # file-level copy-on-write (r10): only the files whose footer
         # row-key range can contain a replaced key are read into the
         # merge plan and superseded; stat-proven clean files of the
@@ -3170,14 +3189,16 @@ class KeyedParquetTable:
             None
             if drift_blocks_append
             else self._cow_split(
-                new.select(*self.keys), parts, has_null=has_null
+                new.select(*self.keys), dirs, has_null=has_null
             )
         )
         if split is None:
             # manifest-pinned touched-slice read (NULL partition keys
             # handled inside — the r7 three-valued-logic hazard): only
             # the touched partitions' live files enter the merge plan
-            old_slice = self._read_touched(sess, parts, part_type=part_type)
+            old_slice = self._read_touched(
+                sess, parts, dirs, part_type=part_type
+            )
             merged = upsert_replace(old_slice, new, self.keys)
         elif split[0]:
             old_slice = self._read_rels(sess, split[0], part_type=part_type)
@@ -3185,37 +3206,7 @@ class KeyedParquetTable:
         else:
             # nothing on disk can collide: a pure keyed append
             merged = new.dropDuplicates(list(self.keys))
-        snap = self._read_snapshot()
-        # before/after listings scoped to the TOUCHED partition dirs
-        # (the write only lands there): O(touched files) per mutation,
-        # never a table walk (manifest v2)
-        scope = (
-            {self._partition_dir_of(p) for p in parts}
-            if snap is not None
-            else None
+        self._append_and_commit(
+            merged, dirs, split, op="upsert", written_schema=merged.schema
         )
-        before = set(self._list_data_files(scope))
-        prev_files = list(snap["files"]) if snap else sorted(before)
-        (
-            merged.write.mode("append")
-            .partitionBy(self.keys[0])
-            .parquet(self.path)
-        )
-        new_files = [
-            f for f in self._list_data_files(scope) if f not in before
-        ]
-        if split is None:
-            touched = {self._partition_dir_of(p) for p in parts}
-            live = [
-                f for f in prev_files if f.split("/", 1)[0] not in touched
-            ] + new_files
-            superseded = [
-                f for f in prev_files if f.split("/", 1)[0] in touched
-            ]
-        else:
-            hit = set(split[0])
-            live = [f for f in prev_files if f not in hit] + new_files
-            superseded = sorted(hit)
-        self._commit_snapshot(
-            live, superseded, op="upsert", written_schema=merged.schema
-        )
+        return n_rows

@@ -1,9 +1,10 @@
 """EPG daily ingest as a DataFrame program (SURVEY.md §3.1 step 3;
 reference: otrrentetl/server/etl.py:57-110).
 
-Per date: I2 idempotency gate by partition → S2 CSV scan → F4 language
-filter → C1 typed coercion with default-on-failure → P2 key derivation
-→ J1 genre enrichment → projection to the declared schema → K2 upsert.
+Per date: I2 idempotency gate by partition (before the day's CSV is
+fetched) → S2 CSV scan → F4 language filter → C1 typed coercion with
+default-on-failure → P2 key derivation → J1 genre enrichment →
+projection to the declared schema → K2 upsert.
 The reference writes one REST call per row; here the day is a single
 dynamic-partition-overwrite write.
 """
@@ -54,18 +55,20 @@ def typed_epg(raw: DataFrame, partition_key: str) -> DataFrame:
     return raw.filter(F.col("language") == "de").select(*cols)
 
 
+def day_partition(day: dt.date) -> str:
+    """The recordings partition that holds ``day``'s EPG rows."""
+    return day.strftime("%Y_%m_%d")
+
+
 def ingest_epg_day(
     spark: SparkSession,
     day: dt.date,
     raw: DataFrame,
     genres: DataFrame,
     store: KeyedParquetTable,
-) -> bool:
-    """One day's ingest; returns True if written, False if the I2 gate
-    (partition already present, etl.py:71) skipped it."""
-    pk = day.strftime("%Y_%m_%d")
-    if not store.partition_is_empty(pk):
-        return False
+) -> int:
+    """One day's ingest; returns the number of rows upserted."""
+    pk = day_partition(day)
     typed = typed_epg(raw, pk)
     enriched = enrich_with_genre(typed, genres)
     # rating/previewimagelink arrive later via the toplist promotion;
@@ -73,8 +76,7 @@ def ingest_epg_day(
     full = enriched.withColumns(
         {"rating": F.lit(""), "previewimagelink": F.lit("")}
     ).select(*RECORDINGS_SCHEMA.fieldNames())
-    store.upsert_replace_partitions(full)
-    return True
+    return store.upsert_replace_partitions(full)
 
 
 def backfill(
@@ -87,11 +89,16 @@ def backfill(
     """D4/I3: run the ingest over a date window (the reference's
     10-day sliding backfill, runetl.py:49-59); ``raw_for_day(day)``
     supplies that day's CSV DataFrame (or None when the source has no
-    file — the reference tolerates missing days). Returns the dates
-    actually ingested."""
+    file — the reference tolerates missing days). A day whose
+    partition is already stored is skipped by the I2 gate BEFORE its
+    CSV is fetched, as the reference gates (etl.py:71) before it
+    downloads (etl.py:75-78). Returns the dates actually ingested."""
     written = []
     for day in days:
+        if not store.partition_is_empty(day_partition(day)):
+            continue
         raw = raw_for_day(day)
-        if raw is not None and ingest_epg_day(spark, day, raw, genres, store):
+        if raw is not None:
+            ingest_epg_day(spark, day, raw, genres, store)
             written.append(day)
     return written

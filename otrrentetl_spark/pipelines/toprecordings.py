@@ -70,7 +70,4 @@ def promote_top(
         "RowKey"
     )
     fresh = promoted.join(existing_top, "RowKey", "left_anti")
-    n = fresh.count()
-    if n:
-        store.upsert_replace_partitions(fresh)
-    return n
+    return store.upsert_replace_partitions(fresh)

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -78,36 +79,31 @@ def update_torrents(
         "loading",
         "loaded",
     ).select(*TORRENTS_SCHEMA.fieldNames())
-    n_saved = new_torrents.count()
-    if n_saved:
-        torrents_store.upsert_replace_partitions(new_torrents)
+    n_saved = torrents_store.upsert_replace_partitions(new_torrents)
 
     # A2/J3: top recordings with zero matching torrents → delete the
     # recording and any stale stored torrents for it (etl.py:254-259).
-    # Pinned eagerly: the frame is consumed AFTER the recordings
-    # deletion below, and a lazy plan would re-derive it from the
-    # already-rewritten store (where the unmatched rows are gone).
-    unmatched = top.join(
-        matched.select("top_rowkey").distinct(), "top_rowkey", "left_anti"
-    ).localCheckpoint(eager=True)
-    n_deleted = unmatched.count()
-    if n_deleted:
-        dead_recordings = unmatched.select(
-            F.lit(TOP_PARTITION).alias("PartitionKey"),
-            F.col("top_rowkey").alias("RowKey"),
-        )
-        recordings_store.delete_by_keys(dead_recordings)
-        if torrents_store.exists():
-            dead_torrents = (
-                torrents_store.read()
-                .join(
-                    unmatched.select(
-                        F.col("top_id").cast("string").alias("PartitionKey")
-                    ),
-                    "PartitionKey",
-                    "left_semi",
-                )
-                .select("PartitionKey", "RowKey")
+    # Collected (a subset of the broadcast 'top' slice): the deletes
+    # below rewrite the recordings store, from which a lazy plan would
+    # re-derive an empty set.
+    dead = top.join(
+        matched.select("top_rowkey"), "top_rowkey", "left_anti"
+    ).select("top_rowkey", "top_id").collect()
+    if dead:
+        recordings_store.delete_by_keys(
+            spark.createDataFrame(
+                pd.DataFrame(
+                    {
+                        "PartitionKey": TOP_PARTITION,
+                        "RowKey": [r["top_rowkey"] for r in dead],
+                    }
+                ),
+                "PartitionKey string, RowKey string",
             )
-            torrents_store.delete_by_keys(dead_torrents)
-    return n_saved, n_deleted
+        )
+        # the torrents table is partitioned by recording Id, so "every
+        # stored torrent of a dead recording" is exactly its partition
+        torrents_store.drop_partitions(
+            {str(r["top_id"]) for r in dead if r["top_id"] is not None}
+        )
+    return n_saved, len(dead)

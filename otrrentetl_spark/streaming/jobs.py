@@ -62,10 +62,9 @@ def run_tumbling_merge_job(
     sink = KeyedParquetTable(spark, sink_path, keys=["window_key", "event_type"])
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # availableNow can deliver a trailing empty batch; merging it
-        # would be a no-op churn of the sink's partition listing.
-        if not batch_df.isEmpty():
-            sink.upsert_replace_partitions(batch_df)
+        # availableNow can deliver a trailing empty batch; the verb
+        # commits nothing for it
+        sink.upsert_replace_partitions(batch_df)
 
     return (
         agg.writeStream.outputMode("update")

@@ -1,7 +1,10 @@
 from __future__ import annotations
 
 import sys
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -25,3 +28,27 @@ def duck():
     from tools.verify_oracle import duck_connect
 
     return duck_connect(SF_SMOKE)
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``with count_jobs() as jobs: ...`` — afterwards ``jobs.n`` is
+    the number of Spark jobs the block submitted from this thread (a
+    private job group, read back from the status tracker)."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def counting():
+        tag = f"count_jobs_{uuid.uuid4().hex}"
+        jobs = SimpleNamespace(n=None)
+        sc.setJobGroup(tag, "job-count pin")
+        try:
+            yield jobs
+        finally:
+            sc.setJobGroup("", "")
+        # the status tracker is fed by the listener bus: drain it so
+        # no finished job is missed
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.n = len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    return counting

@@ -387,7 +387,7 @@ def _preimage_batch(spark, base, ids):
     return pre.unionByName(post)
 
 
-def test_fold_probe_jobs_collapsed(spark, tmp_path, monkeypatch):
+def test_fold_probe_jobs_collapsed(spark, tmp_path, monkeypatch, count_jobs):
     """r10 verdict item 5: apply_changes must answer its routing
     questions (has-preimage / needs-locate / has-removals /
     has-fresh) with ONE aggregate over the pinned batch, not a
@@ -412,21 +412,17 @@ def test_fold_probe_jobs_collapsed(spark, tmp_path, monkeypatch):
         return real_limit(self, n)
 
     monkeypatch.setattr(DataFrame, "limit", spy_limit)
-    sc = spark.sparkContext
 
-    def fold_jobs(tag, ids):
+    def fold_jobs(ids):
         batch = _preimage_batch(spark, base, ids).localCheckpoint(
             eager=True
         )
-        sc.setJobGroup(tag, "apply_changes job-count pin")
-        try:
+        with count_jobs() as jobs:
             idx.apply_changes(batch)
-        finally:
-            sc.setJobGroup("", "")
-        return len(sc.statusTracker().getJobIdsForGroup(tag))
+        return jobs.n
 
-    jobs_a = fold_jobs("fold_pin_a", [1, 5, 9])
-    jobs_b = fold_jobs("fold_pin_b", [13, 17, 21])
+    jobs_a = fold_jobs([1, 5, 9])
+    jobs_b = fold_jobs([13, 17, 21])
     assert idx.last_fold_stats["located_fallback_ids"] == 0
     assert not limit_calls, (
         f"fold built {len(limit_calls)} limit() probe plan(s) — the"

@@ -1999,3 +1999,164 @@ def test_oversized_partition_auto_diverts_from_window_funnel(spark, tmp_path):
     bounds.sort()
     for (lo1, hi1), (lo2, hi2) in zip(bounds, bounds[1:]):
         assert hi1 <= lo2, f"overlapping ranges: {(lo1, hi1)} vs {(lo2, hi2)}"
+
+
+# ------------------------------------------- metadata-answered verbs
+
+
+def test_partition_is_empty_answers_from_manifest(spark, tmp_path, count_jobs):
+    """The I2 gate reads the committed snapshot — live files and their
+    footer-stats row counts — and submits no Spark job; correct on the
+    NULL partition and on a fully emptied table."""
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "gate"), KEYS)
+    t.overwrite(
+        spark.createDataFrame(
+            [("a", "1", "x", 1), (None, "2", "y", 2)], SCHEMA
+        )
+    )
+    with count_jobs() as jobs:
+        answers = [
+            t.partition_is_empty(v) for v in ("a", None, "zzz")
+        ]
+    assert answers == [False, False, True]
+    assert jobs.n == 0
+    t.delete_by_keys(
+        spark.createDataFrame(
+            [("a", "1", "", 0), (None, "2", "", 0)], SCHEMA
+        )
+    )
+    with count_jobs() as jobs:
+        assert t.partition_is_empty("a")
+        assert t.partition_is_empty(None)
+    assert jobs.n == 0
+
+
+def test_partition_is_empty_scans_files_without_stats(
+    spark, tmp_path, monkeypatch
+):
+    """A live file the manifest has no stats for is scanned, never
+    assumed empty."""
+    monkeypatch.setattr(
+        merge.KeyedParquetTable, "_file_stats", lambda self, rel: None
+    )
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "nostats"), KEYS)
+    t.overwrite(
+        spark.createDataFrame(
+            [("a", "1", "x", 1), (None, "2", "y", 2)], SCHEMA
+        )
+    )
+    assert not t._read_snapshot()["stats"]
+    assert not t.partition_is_empty("a")
+    assert not t.partition_is_empty(None)
+    assert t.partition_is_empty("b")
+
+
+SCHEMA_COLS = ("PartitionKey", "RowKey", "val", "n")
+_DROP_ROWS = [
+    ("keep", "1", "k", 1),
+    ("keep", "2", "k", 2),
+    ("p/1:x=%", "3", "e", 3),
+    (None, "4", "n", 4),
+]
+
+
+def test_drop_partitions_is_metadata_only(spark, tmp_path, count_jobs):
+    """drop_partitions retires the named partitions' live files in one
+    commit with no Spark job; other partitions' files stay live and
+    physically untouched, the NULL value and path-escaped values
+    resolve, the change feed reports the dropped rows as deletes, and
+    the previous version stays readable while its files are
+    retained."""
+    path = str(tmp_path / "drop")
+    t = merge.KeyedParquetTable(spark, path, KEYS)
+    t.retain_stale_s = 3600.0
+    t.overwrite(spark.createDataFrame(_DROP_ROWS, SCHEMA))
+    prev = t._read_snapshot()
+    keep_files = [f for f in prev["files"] if f.startswith("PartitionKey=keep/")]
+    keep_state = _partition_file_state(path, "keep")
+    with count_jobs() as jobs:
+        t.drop_partitions(["p/1:x=%", None])
+    assert jobs.n == 0
+    snap = t._read_snapshot()
+    assert snap["version"] == prev["version"] + 1
+    assert sorted(snap["files"]) == sorted(keep_files)
+    assert _partition_file_state(path, "keep") == keep_state
+    assert _rows(t.read()) == [("keep", "1", "k", 1), ("keep", "2", "k", 2)]
+    changes = {
+        (r.PartitionKey, r.RowKey, r.change_type)
+        for r in t.changes(prev["version"]).collect()
+    }
+    assert changes == {("p/1:x=%", "3", "delete"), (None, "4", "delete")}
+    old = t.read(version=prev["version"]).select(*SCHEMA_COLS)
+    assert {tuple(r) for r in old.collect()} == set(_DROP_ROWS)
+
+
+def test_drop_partitions_without_match_commits_nothing(spark, tmp_path):
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "nodrop"), KEYS)
+    t.drop_partitions(["a"])  # no table yet
+    assert not t.exists()
+    t.overwrite(_df(spark, [("a", "1", "x", 1)]))
+    versions = t.history().count()
+    t.drop_partitions(["b", None])
+    assert t.history().count() == versions
+    assert _rows(t.read()) == [("a", "1", "x", 1)]
+
+
+def test_upsert_returns_batch_row_count(spark, tmp_path):
+    """upsert_replace_partitions returns the batch's count(),
+    duplicate keys included, on the first write and on later ones; an
+    empty batch returns 0 and commits nothing."""
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "counted"), KEYS)
+    empty = _df(spark, [])
+    assert t.upsert_replace_partitions(empty) == 0
+    assert not t.exists()
+    first = _df(spark, [("a", "1", "x", 1), ("a", "1", "y", 2), ("b", "2", "z", 3)])
+    assert t.upsert_replace_partitions(first) == first.count() == 3
+    batch = _df(spark, [("a", "1", "u", 4), ("c", "3", "v", 5), ("c", "3", "w", 6)])
+    assert t.upsert_replace_partitions(batch) == batch.count() == 3
+    assert t.read().count() == 3  # (a,1), (b,2), (c,3)
+    history = sorted(tuple(r) for r in t.history().collect())
+    assert t.upsert_replace_partitions(empty) == 0
+    assert sorted(tuple(r) for r in t.history().collect()) == history
+
+
+def test_cow_bounds_survive_hostile_session_confs(spark, tmp_path):
+    """The copy-on-write bounds relation must not depend on how the
+    caller's session parses SQL: string bounds holding a backslash and
+    a quote, and int64-extreme bounds, classify files exactly under
+    escaped string literals and non-ANSI casts — the upsert rewrites
+    only the file holding its key and leaves no duplicate behind."""
+    confs = {
+        "spark.sql.parser.escapedStringLiterals": "true",
+        "spark.sql.ansi.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    lo, hi = -(2**63), 2**63 - 1
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        cases = [
+            ("string", [f"q'{i:03d}\\x" for i in range(400)], "q'007\\x"),
+            ("bigint", [lo] + list(range(-199, 199)) + [hi], hi),
+        ]
+        for rk_type, keys, target in cases:
+            schema = f"PartitionKey string, RowKey {rk_type}, val string"
+            t = merge.KeyedParquetTable(
+                spark, str(tmp_path / f"hostile_{rk_type}"), KEYS
+            )
+            t.overwrite(
+                spark.createDataFrame([("p", k, "old") for k in keys], schema)
+            )
+            t.compact(partitions=["p"], files_per_partition=4, cluster=True)
+            before = set(t._read_snapshot()["files"])
+            t.upsert_replace_partitions(
+                spark.createDataFrame([("p", target, "new")], schema)
+            )
+            after = set(t._read_snapshot()["files"])
+            assert len(before - after) == 1, rk_type
+            got = t.read().filter(F.col("RowKey") == F.lit(target)).collect()
+            assert [r["val"] for r in got] == ["new"], rk_type
+            assert t.read().count() == len(keys), rk_type
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

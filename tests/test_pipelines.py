@@ -78,13 +78,10 @@ def _tracker():
     ]
 
 
-@pytest.fixture(scope="module")
-def etl_state(spark, tmp_path_factory):
-    from otrrentetl_spark.pipelines.runner import EtlSources, EtlStores, run_once
+def _sources(spark, root, tracker_rows):
+    from otrrentetl_spark.pipelines.runner import EtlSources
     from otrrentetl_spark.sources import scrape
     from otrrentetl_spark.sources.csv_ingest import read_semicolon_csv
-
-    root = tmp_path_factory.mktemp("otr_state")
 
     def _csv_df(text: str):
         p = root / f"in_{abs(hash(text))}.csv"
@@ -99,12 +96,20 @@ def etl_state(spark, tmp_path_factory):
         return None
 
     pages = lambda html: scrape.pages_df(spark, iter([(0, html)]))  # noqa: E731
-    sources = EtlSources(
+    return EtlSources(
         genres_csv=lambda: _csv_df(fx.genres_csv()),
         epg_csv_for_day=epg_for_day,
         toplist=lambda: scrape.toplist_rows(pages(fx.toplist_html(_toplist()))),
-        tracker=lambda: scrape.tracker_rows(pages(fx.tracker_html(_tracker()))),
+        tracker=lambda: scrape.tracker_rows(pages(fx.tracker_html(tracker_rows))),
     )
+
+
+@pytest.fixture(scope="module")
+def etl_state(spark, tmp_path_factory):
+    from otrrentetl_spark.pipelines.runner import EtlStores, run_once
+
+    root = tmp_path_factory.mktemp("otr_state")
+    sources = _sources(spark, root, _tracker())
     stores = EtlStores.at(spark, root / "tables")
     report1 = run_once(spark, sources, stores, today=TODAY)
     report2 = run_once(spark, sources, stores, today=TODAY)  # idempotency
@@ -157,3 +162,48 @@ def test_second_run_is_idempotent(etl_state):
     assert recs.filter(F.col("PartitionKey") == "2026_08_05").count() == 3
     assert {r["Id"] for r in recs.filter(F.col("PartitionKey") == "top").collect()} == {101}
     assert stores.torrents.read().count() == 2
+
+
+def test_backfill_gates_before_fetching(spark, etl_state):
+    """I2 gate before the fetch (etl.py:71, then :75-78): a day whose
+    partition is stored never reaches the CSV provider."""
+    from otrrentetl_spark.pipelines import epg
+
+    stores, _, _ = etl_state
+    fetched = []
+
+    def raw_for_day(day: dt.date):
+        fetched.append(day)
+        return None
+
+    later = DAY_B + dt.timedelta(days=1)
+    written = epg.backfill(
+        spark, [DAY_A, DAY_B, later], raw_for_day, stores.genres.read(),
+        stores.recordings,
+    )
+    assert written == []
+    assert fetched == [later]
+
+
+def test_unmatched_top_recording_loses_stored_torrents(spark, tmp_path):
+    """A2/J3 on stored torrents: a top recording that got torrents in
+    run 1 and matches none in run 2 is deleted along with its whole
+    torrents partition."""
+    from otrrentetl_spark.pipelines.runner import EtlStores, run_once
+
+    stores = EtlStores.at(spark, tmp_path / "tables")
+    first = run_once(
+        spark, _sources(spark, tmp_path, _tracker()), stores, today=TODAY
+    )
+    assert first["torrents_saved"] == 2
+    assert stores.torrents.read().count() == 2
+    # only the stale row: the I4 stop leaves no torrent in the window
+    second = run_once(
+        spark, _sources(spark, tmp_path, _tracker()[2:]), stores, today=TODAY
+    )
+    assert second["torrents_saved"] == 0
+    assert second["top_deleted"] == 2  # 101 (had torrents) + re-promoted 102
+    assert stores.torrents.read().count() == 0
+    assert not stores.torrents.exists()
+    top = stores.recordings.read().filter(F.col("PartitionKey") == "top")
+    assert top.count() == 0
